@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--partitions", default=None, help="comma-separated part_ids")
     ap.add_argument("--include-artifacts", action="store_true")
-    ap.add_argument("--mega-threshold-bytes", type=int, default=2_000_000)
     ap.add_argument(
         "--reading-order",
         choices=("emission", "simple", "xycut", "structure"),
@@ -53,7 +52,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from oxidizepdf_spark.kernel.textstate import ExtractionOptions
     from oxidizepdf_spark.pipeline import run_extraction
@@ -72,9 +73,11 @@ def main() -> None:
     if args.resume:
         try:
             done = read_table(spark, args.metrics).where(
-                f"run_id = '{args.run_id}'"
+                F.col("run_id") == args.run_id
             )
-        except Exception:
+        except AnalysisException as e:
+            if e.getErrorClass() not in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
+                raise
             done = None  # first run: no metrics table yet
 
     options = ExtractionOptions(
@@ -86,9 +89,7 @@ def main() -> None:
     spans, metrics = run_extraction(
         docs, run_id=args.run_id, options=options, done_metrics=done
     )
-    # Persist once; derive both outputs from the same computation.
-    spans_with_part = spans
-    write_table(spans_with_part, args.output, partition_by=("part_id",), mode="append" if args.resume else "overwrite")
+    write_table(spans, args.output, partition_by=("part_id",), mode="append" if args.resume else "overwrite")
     write_table(metrics, args.metrics, partition_by=(), mode="append")
     print(f"run {args.run_id} complete", file=sys.stderr)
     spark.stop()

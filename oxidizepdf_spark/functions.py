@@ -13,7 +13,7 @@ per-document kernel runs inside, same as the pipeline). Registered names:
 - ``oxpdf_page_count(binary) -> int``           page count (0 on error)
 - ``oxpdf_metadata_json(binary) -> string``     metadata dict as JSON
 - ``oxpdf_tables_json(binary) -> string``       detected bordered tables
-- ``oxpdf_elements_json(binary) -> string``     typed elements (title/para)
+- ``oxpdf_elements_json(binary) -> string``     typed elements (kind/text/heading/page)
 - ``oxhtml_main_content(string) -> string``     HTML boilerplate strip
 
 UDF objects are built lazily (pandas_udf validates against a live session,
@@ -142,8 +142,8 @@ def _fn_tables_json(data: pd.Series) -> pd.Series:
 
 
 def _fn_elements_json(data: pd.Series) -> pd.Series:
-    from .kernel.elements import classify_pages
     from .kernel.extract import extract_pdf_bytes
+    from .kernel.partition import classify_pages
     from .kernel.textstate import ExtractionOptions
 
     opts = ExtractionOptions(
@@ -162,9 +162,9 @@ def _fn_elements_json(data: pd.Series) -> pd.Series:
                     [
                         {
                             "kind": e.kind,
-                            "text": e.text,
-                            "heading": e.heading,
-                            "page": e.page,
+                            "text": e.display_text(),
+                            "heading": e.metadata.parent_heading,
+                            "page": e.page(),
                         }
                         for e in els
                     ]
@@ -180,9 +180,9 @@ def _fn_export_markdown(data: pd.Series) -> pd.Series:
     this engine's elements + table detection): '##' headings, paragraph
     blocks, pipe tables, '# Document' default title."""
     from .kernel.ai_export import export_structured_markdown
-    from .kernel.elements import classify_pages
     from .kernel.extract import extract_pdf_bytes
     from .kernel.pages import flatten_page_tree, page_content
+    from .kernel.partition import classify_pages
     from .kernel.reader import PdfReader
     from .kernel.tables import detect_page_tables
     from .kernel.textstate import ExtractionOptions

@@ -5,7 +5,7 @@ oxidize-pdf-core/src/ai/formats.rs; module intent ai/mod.rs:1-30
 "Export to Markdown ... Contextual format for LLM prompts") plus a
 structure-aware markdown composer over this engine's typed elements +
 detected tables (the composition the reference reaches via its
-semantic/ layer; here elements.py + tables.py are the inputs).
+semantic/ layer; here partition.py + tables.py are the inputs).
 
 String conventions match the reference byte-for-byte where it defines
 them:
@@ -575,20 +575,20 @@ def table_to_markdown(table) -> str:
 
 
 def elements_to_markdown_blocks(elements) -> list[str]:
-    """Typed elements (kernel/elements.py classify_pages output) →
-    markdown blocks: titles render as ``## `` headings (level 2 — level 1
-    is the document title from metadata), headers/footers are boilerplate
-    and dropped, list items keep their own marker text ('1. ' / '- '
-    prefixes are already valid markdown list syntax), paragraphs pass
-    through."""
+    """Typed elements (kernel/partition.py classify_pages output) →
+    markdown blocks of their display text: titles render as ``## ``
+    headings (level 2 — level 1 is the document title from metadata),
+    headers/footers are boilerplate and dropped, list items keep their
+    own marker text ('1. ' / '- ' prefixes are already valid markdown
+    list syntax), paragraphs and 'key: value' lines pass through."""
     blocks = []
     for el in elements:
         if el.kind in ("header", "footer"):
             continue
         if el.kind == "title":
-            blocks.append("## " + el.text)
+            blocks.append("## " + el.display_text())
         else:
-            blocks.append(el.text)
+            blocks.append(el.display_text())
     return blocks
 
 

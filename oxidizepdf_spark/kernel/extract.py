@@ -478,7 +478,7 @@ def extract_elements(data: bytes, options: ExtractionOptions | None = None):
     /Outlines titles — when present — are authoritative headings, so
     outline-bearing PDFs chunk on their real section structure even when
     headings share the body font size. Returns (elements, DocResult)."""
-    from .elements import classify_pages
+    from .partition import classify_pages
 
     opts = options or ExtractionOptions(
         preserve_layout=True, reconstruct_paragraphs=True

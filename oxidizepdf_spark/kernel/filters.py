@@ -25,7 +25,6 @@ and never decodes them; SURVEY.md §2.2).
 from __future__ import annotations
 
 import binascii
-import struct
 import zlib
 
 import numpy as np
@@ -442,25 +441,3 @@ def decode_stream_data(data: bytes, filter_entry, decode_parms) -> bytes:
     for i, name in enumerate(filters):
         result = apply_filter_with_params(result, name, _filter_params(decode_parms, i))
     return result
-
-
-def sniff_jpeg_info(data: bytes) -> tuple[int, int] | None:
-    """Minimal JPEG header sniff (filters.rs:116 re-export) for image
-    metrics: returns (width, height) or None."""
-    if len(data) < 4 or data[0] != 0xFF or data[1] != 0xD8:
-        return None
-    i = 2
-    while i + 9 < len(data):
-        if data[i] != 0xFF:
-            i += 1
-            continue
-        marker = data[i + 1]
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3):
-            h, w = struct.unpack(">HH", data[i + 5 : i + 9])
-            return (w, h)
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        i += 2 + seg_len
-    return None

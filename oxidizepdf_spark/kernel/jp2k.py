@@ -1070,16 +1070,6 @@ class _BandState:
         self.first = np.ones((nby, nbx), dtype=bool)
 
 
-def _cb_grid(bh: int, bw: int, cbh: int, cbw: int) -> tuple[int, int]:
-    return (-(-bh // cbh) if bh else 0, -(-bw // cbw) if bw else 0)
-
-
-def _res_dims(th: int, tw: int, levels: int, res: int) -> tuple[int, int]:
-    """Resolution-grid dims at resolution ``res`` (0 = smallest)."""
-    sh = levels - res
-    return -(-th // (1 << sh)), -(-tw // (1 << sh))
-
-
 def _precinct_geometry(res: int, pp) -> tuple[int, int, int, int]:
     """(cell_h_band, cell_w_band, ppy, ppx) for resolution ``res`` —
     precinct cells are defined on the RESOLUTION grid (B.6); at res>0 a

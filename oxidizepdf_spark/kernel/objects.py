@@ -456,8 +456,3 @@ def parse_object(lexer: Lexer, depth: int = 0):
     if kind == "eof":
         raise PdfParseError("unexpected EOF")
     raise PdfParseError(f"unexpected token {kind} at {lexer.pos}")
-
-
-def resolve_shallow(value, resolve):
-    """Resolve a value if it is a Ref; leave everything else as-is."""
-    return resolve(value) if isinstance(value, Ref) else value

@@ -4,9 +4,8 @@ Behavioral parity target: the reference's pipeline/partition.rs
 (`Partitioner`, `PartitionConfig`, `assign_heading_paths`) and
 pipeline/element.rs (the full Element enum with per-element metadata),
 plus the spatial-cluster table detector it delegates to
-(text/structured/table.rs `detect_tables`). This supersedes the
-lightweight subset in kernel/elements.py (kept for the span-contract
-queries) with the reference's complete classification sequence:
+(text/structured/table.rs `detect_tables`), with the reference's
+complete classification sequence:
 
 0. struct-tag classification (partition.rs:228-264): H/H1-H6/Title →
    Title at confidence 1.0; LI/Lbl/LBody → ListItem at 1.0; L and
@@ -23,17 +22,37 @@ queries) with the reference's complete classification sequence:
    keys, confidence penalizing long/multi-word keys.
 4. titles (partition.rs:505-553): font-ratio OR bold-short OR
    numeric-prefix signals, confidence = max of signals clamped [.5, 1].
-5. list items (partition.rs:555-562, same is_list_item as elements.py).
+5. list items (partition.rs:555-562, is_list_item).
 6. paragraphs (default).
 Then a page-order sort (partition.rs:571-578) and heading-path
 assignment (partition.rs:587-639: title font sizes bucketed desc with
 5% merge → level; a (level, text) stack yields the breadcrumb;
 parent_heading = leaf — a title's own parent_heading is itself).
 
-Body font size here follows partition.rs:437-467 — the mode over
-UNCLAIMED fragments quantized to 0.5 pt (half-away-from-zero rounding),
-ties toward the smaller size, 12.0 when no sized fragments remain —
-which deliberately differs from elements.py's exact-size mode.
+Body font size follows partition.rs:437-467 — the mode over UNCLAIMED
+fragments quantized to 0.5 pt (half-away-from-zero rounding), ties
+toward the smaller size, 12.0 when no sized fragments remain.
+
+``classify_pages`` is the document-level adapter the element queries,
+the elements/markdown SQL functions and ``extract_elements`` share. It
+only fixes settings of the partitioner above:
+
+- tables off and reading order 'none': its callers hand it
+  paragraph-reconstructed fragments already in extraction order, and
+  table detection is a separate pass where they want it;
+- page height 792 pt: the US-Letter MediaBox every corpus builder
+  writes, so the 5% header/footer zones sit where the pages put them;
+- a stable re-sort by (page, top edge descending): the partitioner
+  emits claimed furniture (headers/footers) before the body, and the
+  re-sort puts it back in reading order on its page;
+- newlines folded to spaces in each element's display text:
+  paragraph reconstruction joins lines with '\n', while chunk and
+  markdown text are single-line; a key-value element keeps its full
+  'key: value' line;
+- heading paths assigned once over the whole document rather than per
+  page, so a section's lineage carries across page breaks, and
+  ``known_headings`` (outline titles) promote matching non-furniture
+  elements to titles first.
 """
 
 from __future__ import annotations
@@ -342,8 +361,6 @@ def numeric_prefix_title(f) -> bool:
         return False
     if not matches_section_prefix(trimmed):
         return False
-    from .elements import is_list_item
-
     if is_list_item(trimmed):
         return False
     rest = strip_section_prefix(trimmed).lstrip()
@@ -354,6 +371,36 @@ def numeric_prefix_title(f) -> bool:
     if len(trimmed.split()) > MAX_NUMERIC_TITLE_WORDS:
         return False
     return True
+
+
+_BULLETS = ("- ", "• ", "* ", "– ", "— ")
+
+
+def is_list_item(text: str) -> bool:
+    """partition.rs:722-757: bullet prefixes, or '1. '/'2) '/'a. '/'a) '
+    (single digit/lowercase letter, or two digits) followed by a space."""
+    t = text.lstrip()
+    if t.startswith(_BULLETS):
+        return True
+    if len(t) >= 3:
+        c0, c1, c2 = t[0], t[1], t[2]
+        if (
+            (c0.isascii() and (c0.isdigit() or c0.islower()))
+            and c1 in ".)"
+            and c2 == " "
+        ):
+            return True
+        if (
+            len(t) >= 4
+            and c0.isascii()
+            and c0.isdigit()
+            and c1.isascii()
+            and c1.isdigit()
+            and t[2] in ".)"
+            and t[3] == " "
+        ):
+            return True
+    return False
 
 
 _HEADING_TAGS = frozenset(("H", "H1", "H2", "H3", "H4", "H5", "H6", "Title"))
@@ -837,8 +884,6 @@ class Partitioner:
                 continue
 
             # 5. list item
-            from .elements import is_list_item
-
             if is_list_item(text):
                 elements.append(RichElement(KIND_LIST_ITEM, text, meta))
                 continue
@@ -981,6 +1026,34 @@ def partition_document(
             )
         )
     return out
+
+
+def classify_pages(page_fragments, known_headings=None) -> list[RichElement]:
+    """Per-page paragraph fragments (DocResult.page_fragments) → one
+    document-ordered element list with document-level heading paths;
+    ``known_headings`` is an optional set of authoritative heading
+    strings (outline /Title values). The policy and the reason for each
+    step are in the module docstring."""
+    elements = partition_document(
+        page_fragments,
+        PartitionConfig(detect_tables=False, reading_order="none"),
+        page_height=792.0,
+    )
+    elements.sort(key=lambda e: (e.metadata.page, -e.metadata.bbox.top()))
+    for e in elements:
+        if e.kind == KIND_KEY_VALUE:
+            e.key = e.key.replace("\n", " ")
+            e.value = e.value.replace("\n", " ")
+        else:
+            e._text = e._text.replace("\n", " ")
+        if (
+            known_headings
+            and e.kind not in (KIND_HEADER, KIND_FOOTER)
+            and e.display_text() in known_headings
+        ):
+            e._text = e.display_text()
+            e.kind = KIND_TITLE
+    return assign_heading_paths(elements)
 
 
 def export_elements_markdown(

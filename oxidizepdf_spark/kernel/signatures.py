@@ -478,13 +478,6 @@ def _parse_signature_algorithm(
         raise SignatureError(f"Unsupported algorithm: signature OID: {oid}") from None
 
 
-def signature_digest_algorithm(sig_alg: str) -> str:
-    """SignatureAlgorithm::digest_algorithm (cms.rs:452)."""
-    return {"RSA-SHA256": "SHA-256", "RSA-SHA384": "SHA-384",
-            "RSA-SHA512": "SHA-512", "ECDSA-SHA256": "SHA-256",
-            "ECDSA-SHA384": "SHA-384", "RSA-SHA1": "SHA-1"}[sig_alg]
-
-
 @dataclass
 class ParsedSignature:
     """cms.rs:467 ParsedSignature + the signed-attrs detail the reference

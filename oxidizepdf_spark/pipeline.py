@@ -81,7 +81,6 @@ def _extract_batches(
         ]
     )
     for batch in batches:
-        t0 = time.perf_counter()
         n = batch.num_rows
         names = batch.schema.names
         doc_ids = batch.column(names.index("doc_id")).to_pylist()
@@ -142,7 +141,6 @@ def _extract_batches(
             nspans_c.append(len(spans))
             bytes_c.append(int(meta["bytes_in"]))
             wall_c.append((time.perf_counter() - t_doc) * 1000.0)
-        _ = t0
         spans_arr = pa.ListArray.from_arrays(
             pa.array(out_offsets, type=pa.int32()),
             pa.StructArray.from_arrays(

@@ -48,46 +48,44 @@ def norm_col(col: str = "text"):
     )
 
 
-_PLAN_MEMO: dict = {}
+_MEMO: dict = {}
 
 
-def _plan_memo(spark: SparkSession, key: str, build):
-    """Per-application memo of table/relation DataFrames (r11): a
-    DataFrame is a PLAN, not data — nothing is cached but the resolved
-    schema/file-index metadata, exactly what a catalog temp view reuses.
-    Repeated `spark.read.parquet` re-reads footers (~100 ms) and every
-    `inputFiles()` re-lists (~55 ms), costs paid on each of the bench's
-    per-run query rebuilds. Keyed by applicationId so a stopped session
-    never leaks stale plans into a new one."""
-    k = (spark.sparkContext.applicationId, key)
-    df = _PLAN_MEMO.get(k)
-    if df is None:
-        df = build()
-        _PLAN_MEMO[k] = df
-    return df
+def _app_memo(spark: SparkSession, key, build):
+    """One application-scoped memo for plan-building objects (r11) that
+    cost a JVM round-trip to make but hold no data:
+
+    - relation DataFrames: a DataFrame is a PLAN — nothing is cached but
+      the resolved schema/file-index metadata, exactly what a catalog
+      temp view reuses; a repeated `spark.read.parquet` re-reads footers
+      (~100 ms) and every `inputFiles()` re-lists (~55 ms);
+    - parsed Column expressions (``_expr_memo``): ``F.expr`` pays a py4j
+      round-trip plus a JVM SQL parse per call; a Column is an immutable
+      UNRESOLVED expression tree, so reusing it changes nothing about
+      what executes.
+
+    Entries are keyed by applicationId; the first miss under a new
+    application evicts every other application's entries, so a stopped
+    session never leaks stale plans into a new one."""
+    app = spark.sparkContext.applicationId
+    k = (app, key)
+    v = _MEMO.get(k)
+    if v is None:
+        for stale in [o for o in _MEMO if o[0] != app]:
+            del _MEMO[stale]
+        v = _MEMO[k] = build()
+    return v
 
 
-_EXPR_MEMO: dict = {}
-
-
-def _expr_memo(spark: SparkSession, key: str, sql: str):
-    """Per-application memo of parsed Column expressions (r11, same
-    rationale as _plan_memo): ``F.expr`` pays a py4j round-trip plus a
-    JVM SQL parse per call, re-paid on every bench issuance for the big
-    SQL folds below. A Column is an immutable UNRESOLVED expression
-    tree — no data, no plan state — so reusing the parsed tree across
-    issuances changes nothing about what executes. Keyed by
-    applicationId so a stopped session never leaks into a new one."""
-    k = (spark.sparkContext.applicationId, key)
-    c = _EXPR_MEMO.get(k)
-    if c is None:
-        c = F.expr(sql)
-        _EXPR_MEMO[k] = c
-    return c
+def _expr_memo(spark: SparkSession, sql: str):
+    """``F.expr(sql)`` memoized per application, keyed by the SQL text
+    itself, so two call sites can only share a parsed expression when
+    their SQL is identical."""
+    return _app_memo(spark, ("expr", sql), lambda: F.expr(sql))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plan_memo(
+    return _app_memo(
         spark, f"docs:{sf_dir}",
         lambda: spark.read.parquet(f"{sf_dir}/documents.parquet"),
     )
@@ -150,11 +148,11 @@ def _docs_norm_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return raw.select("doc_id", norm_col("text").alias("norm"))
 
-    return _plan_memo(spark, f"docs_norm_reb:{sf_dir}", build)
+    return _app_memo(spark, f"docs_norm_reb:{sf_dir}", build)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _plan_memo(
+    return _app_memo(
         spark, f"emb:{sf_dir}",
         lambda: spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
     )
@@ -163,7 +161,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_rebalanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rebalanced (vec_id, embedding) relation — see _rebalance_for_udf;
     memoized so the ann queries' rebuilds skip the re-listing."""
-    return _plan_memo(
+    return _app_memo(
         spark, f"emb_reb:{sf_dir}",
         lambda: _rebalance_for_udf(
             spark, _emb(spark, sf_dir).select("vec_id", "embedding")
@@ -296,21 +294,6 @@ def _pdf_roundtrip(variant: str, with_mode: bool = False):
         return out.select(*keep)
 
     return q
-
-
-def _pdf_roundtrip_oracle(variant: str, with_mode: bool = False) -> str:
-    norm = NORM_SQL.format(col="text")
-    n_words = f"len(string_split({norm}, ' '))"
-    n_lines = f"CAST(ceil({n_words} / {WORDS_PER_LINE}.0) AS INT)"
-    if variant in ("classic", "recovery", "multipage"):
-        n_pages = f"CAST(ceil({n_lines} / {LINES_PER_PAGE}.0) AS INT)"
-    else:
-        n_pages = "1"
-    mode = ", 'recovered' AS mode" if with_mode else ""
-    return (
-        f"SELECT doc_id, {norm} AS text, {n_lines} AS n_lines, "
-        f"{n_pages} AS n_pages{mode} FROM documents"
-    )
 
 
 # Registry-consolidated structural round-trip: the driver records the first
@@ -894,50 +877,6 @@ WHERE second <> ''
 """
 
 
-def _pdf_encrypted_roundtrip(method: str):
-    """Decryption round-trip (F11 full path, encryption_handler.rs +
-    standard_security.rs): each document becomes an EMPTY-user-password
-    encrypted PDF (RC4 or AES-128-CBC per-object keys); extraction must
-    transparently unlock and recover the exact text."""
-
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        docs = _docs_norm_rebalanced(spark, sf_dir)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .corpus import build_encrypted_pdf
-            from .kernel.extract import extract_pdf_bytes
-
-            for b in batches:
-                out = {"doc_id": [], "text": [], "n_lines": [], "unlocked": []}
-                for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                    pdf = build_encrypted_pdf(
-                        "\n".join(_wrap_lines(norm)), method=method
-                    )
-                    res = extract_pdf_bytes(pdf)
-                    text = res.page_texts[0] if res.page_texts else ""
-                    out["doc_id"].append(doc_id)
-                    out["text"].append(text.replace("\n", " "))
-                    out["n_lines"].append(text.count("\n") + 1 if text or norm == "" else 1)
-                    out["unlocked"].append(res.error is None)
-                yield pd.DataFrame(out)
-
-        return docs.mapInPandas(
-            run, schema="doc_id long, text string, n_lines int, unlocked boolean"
-        )
-
-    return q
-
-
-def _pdf_encrypted_roundtrip_oracle() -> str:
-    norm = NORM_SQL.format(col="text")
-    n_words = f"len(string_split({norm}, ' '))"
-    return (
-        f"SELECT doc_id, {norm} AS text, "
-        f"CAST(ceil({n_words} / {WORDS_PER_LINE}.0) AS INT) AS n_lines, "
-        f"TRUE AS unlocked FROM documents"
-    )
-
-
 def q_pdf_extract_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consolidated empty-user-password decryption round-trip (F11,
     encryption_handler.rs + standard_security.rs): even doc_ids encrypt
@@ -1197,7 +1136,7 @@ def _shingles_spark(d: DataFrame) -> DataFrame:
         f"{SHINGLE_K}, 0)), "
         f"i -> concat_ws(' ', slice(split(norm, ' '), i + 1, {SHINGLE_K})))"
     )
-    shingles = _expr_memo(d.sparkSession, "shingles", shingles_sql)
+    shingles = _expr_memo(d.sparkSession, shingles_sql)
     return d.select(
         "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
     ).where(F.length("shingle") > 0)
@@ -1245,7 +1184,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"cast(get(mh, b * {rows_per_band} + {r}) AS string)"
         for r in range(rows_per_band)
     )
-    bands_arr = _expr_memo(spark, "minhash_bands", f"""
+    bands_arr = _expr_memo(spark, f"""
         get(transform(array(split(norm, ' ')), ws ->
           get(transform(array(
                 transform(
@@ -1310,7 +1249,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.size("ds")
     pairs_arr = _expr_memo(
-        spark, "bucket_pairs",
+        spark,
         "flatten(transform(sequence(0, size(ds) - 2), "
         "i -> transform(sequence(i + 1, size(ds) - 1), "
         "j -> struct(ds[i] AS doc_a, ds[j] AS doc_b))))",
@@ -1389,7 +1328,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hs_sql = f"transform(filter(split(norm, ' '), w -> length(w) > 0), w -> {h})"
     hashed = d.select(
-        "doc_id", _expr_memo(spark, "simhash_hs", hs_sql).alias("hs")
+        "doc_id", _expr_memo(spark, hs_sql).alias("hs")
     )
 
     def vote(bit: int) -> str:
@@ -1405,7 +1344,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(SIMHASH_BITS)
     )
     return hashed.select(
-        "doc_id", _expr_memo(spark, "simhash_sig", sig_sql).alias("simhash")
+        "doc_id", _expr_memo(spark, sig_sql).alias("simhash")
     )
 
 
@@ -1564,7 +1503,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.size("ds")
     pairs_arr = _expr_memo(
-        spark, "bucket_pairs",
+        spark,
         "flatten(transform(sequence(0, size(ds) - 2), "
         "i -> transform(sequence(i + 1, size(ds) - 1), "
         "j -> struct(ds[i] AS doc_a, ds[j] AS doc_b))))",
@@ -1806,7 +1745,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings file is one task otherwise (same guard as the per-doc
     # Python operators — narrow rows, bounded shuffle, no-op at
     # production split counts)
-    nv_expr = _expr_memo(spark, "ann_l2_emb", _l2norm_sql("embedding"))
+    nv_expr = _expr_memo(spark, _l2norm_sql("embedding"))
     en = _emb_rebalanced(spark, sf_dir).select(
         "vec_id", "embedding", nv_expr.alias("nv")
     )
@@ -1822,7 +1761,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _expr_memo(
-                spark, "ann_pair_cos",
+                spark,
                 f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
             ).alias("cos"),
         )
@@ -1896,7 +1835,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _expr_memo(
-                spark, "ann_pair_cos",
+                spark,
                 f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
             ).alias("cos"),
         )
@@ -1970,7 +1909,7 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     carr = cents.select(
         "centroid_id", "cv",
         _expr_memo(
-            spark, "assign_ncv",
+            spark,
             "sqrt(aggregate(transform(cv, x -> double(x) * double(x)),"
             " double(0), (acc, v) -> acc + v))",
         ).alias("ncv"),
@@ -1987,7 +1926,7 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     # exactly the F-API tree this replaces (snapshot-pinned): same fold
     # order, same round(dot/(nv*ncv), 6), same NaN-aware comparisons and
     # lowest-centroid tie-break.
-    picked = _expr_memo(spark, "assign_pick", """
+    picked = _expr_memo(spark, """
         get(transform(array(
             sqrt(aggregate(transform(embedding, x -> double(x) * double(x)),
                            double(0), (acc, v) -> acc + v))
@@ -2042,7 +1981,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c0 = e.where(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
         _expr_memo(
-            spark, "emb_as_double", "transform(embedding, x -> double(x))"
+            spark, "transform(embedding, x -> double(x))"
         ).alias("cv"),
     )
     # parallelize both map-side E-steps over a single-row-group scan (see
@@ -2071,7 +2010,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = e.where(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
-        _expr_memo(spark, "ann_l2_emb", _l2norm_sql("embedding")).alias("nq"),
+        _expr_memo(spark, _l2norm_sql("embedding")).alias("nq"),
     )
     wp = Window.partitionBy("query_id").orderBy(
         F.desc("pcos"), F.asc("centroid_id")
@@ -2084,7 +2023,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nq",
             "centroid_id",
             _expr_memo(
-                spark, "kmeans_pcos", f"round({_cos_sql('qv', 'cv')}, 6)"
+                spark, f"round({_cos_sql('qv', 'cv')}, 6)"
             ).alias("pcos"),
         )
         .withColumn("r", F.row_number().over(wp))
@@ -2098,7 +2037,7 @@ def q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             _expr_memo(
-                spark, "ann_pair_cos",
+                spark,
                 f"round({_dot_sql('qv', 'embedding')} / (nq * nv), 6)",
             ).alias("cos"),
         )
@@ -2350,25 +2289,6 @@ def q_text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_REPETITION = f"""
-WITH base AS (
-  SELECT doc_id, string_split({NORM_SQL.format(col='text')}, ' ') AS ws
-  FROM documents
-),
-freq AS (
-  SELECT doc_id, w, COUNT(*) AS c
-  FROM base, UNNEST(ws) AS t(w)
-  GROUP BY doc_id, w
-)
-SELECT b.doc_id,
-       len(b.ws) AS n_words,
-       ROUND((len(b.ws) - COUNT(*)) * 1.0 / greatest(len(b.ws), 1), 6)
-         AS dup_word_fraction,
-       ROUND(MAX(f.c) * 1.0 / greatest(len(b.ws), 1), 6) AS top_word_fraction
-FROM base b JOIN freq f ON b.doc_id = f.doc_id
-GROUP BY b.doc_id, len(b.ws)
-"""
-
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _URL_RE = r"https?://[^\s]+"
 _PHONE_RE = r"\+?[0-9][0-9()\-\s]{7,}[0-9]"
@@ -2421,14 +2341,6 @@ def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("norm").alias("n_chars"),
     )
 
-
-ORACLE_TOKEN_COUNT = f"""
-SELECT doc_id,
-       len(string_split(norm, ' ')) AS ws_tokens,
-       len(regexp_extract_all(norm, '{_TOKEN_RE}')) AS bpe_tokens,
-       length(norm) AS n_chars
-FROM (SELECT doc_id, {NORM_SQL.format(col='text')} AS norm FROM documents)
-"""
 
 FP_WINDOW = 4
 
@@ -3201,140 +3113,6 @@ TABLE_COLS = 3
 TABLE_WORD_CLIP = 12  # cell words clipped so centers stay inside cells
 
 
-def q_pdf_extract_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bordered-table detection end-to-end: each document renders a 4x3
-    grid (stroked m/l lines + one text run per cell, cell text drawn from
-    the document's words), extraction yields positioned fragments, the
-    graphics pass extracts vector lines (graphics/extraction.rs), and the
-    detector clusters them into a grid and assigns fragments to cells by
-    center containment (text/table_detection.rs). The oracle recomputes
-    every cell's text from the word array + grid constants — proving cell
-    geometry, line clustering, and text assignment all at once."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import build_table_pdf
-        from .kernel.extract import extract_pdf_bytes
-        from .kernel.pages import flatten_page_tree, page_content
-        from .kernel.reader import PdfReader
-        from .kernel.tables import detect_page_tables
-        from .kernel.textstate import ExtractionOptions
-
-        opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "row_idx": [], "col_idx": [],
-                "cell_text": [], "n_rows": [], "n_cols": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                pdf = build_table_pdf(cells)
-                res = extract_pdf_bytes(pdf, opts)
-                reader = PdfReader(pdf)
-                content = page_content(reader, flatten_page_tree(reader)[0])
-                tables = detect_page_tables(content, res.page_fragments[0])
-                for t in tables:
-                    for cell in t.cells:
-                        out["doc_id"].append(doc_id)
-                        out["row_idx"].append(cell.row)
-                        out["col_idx"].append(cell.column)
-                        out["cell_text"].append(cell.text)
-                        out["n_rows"].append(t.rows)
-                        out["n_cols"].append(t.columns)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, row_idx int, col_idx int, cell_text string, "
-        "n_rows int, n_cols int",
-    )
-
-
-ORACLE_TABLES = f"""
-WITH base AS (
-  SELECT doc_id,
-         list_filter(string_split({NORM_SQL.format(col='text')}, ' '),
-                     w -> len(w) > 0) AS ws
-  FROM documents
-)
-SELECT doc_id, r AS row_idx, c AS col_idx,
-       CASE WHEN len(ws) = 0 THEN 'x'
-            ELSE substr(ws[((r*{TABLE_COLS} + c) % len(ws)) + 1],
-                        1, {TABLE_WORD_CLIP}) END AS cell_text,
-       {TABLE_ROWS} AS n_rows, {TABLE_COLS} AS n_cols
-FROM base,
-     UNNEST(generate_series(0, {TABLE_ROWS - 1})) AS t(r),
-     UNNEST(generate_series(0, {TABLE_COLS - 1})) AS u(c)
-"""
-
-
-def q_pdf_extract_tables_borderless(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BORDERLESS table detection (the reference's declared-but-stubbed
-    detect_borderless config, table_detection.rs:77 — implemented here via
-    alignment clustering): the same 4x3 per-document grid as
-    pdf_extract_tables but rendered with NO lines; columns must be
-    recovered purely from repeated left-edge alignment and rows from
-    baseline clusters. Same oracle shape — every cell recomputed from the
-    word array + geometry constants."""
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .corpus import build_borderless_table_pdf
-        from .kernel.extract import extract_pdf_bytes
-        from .kernel.tables import detect_borderless_tables
-        from .kernel.textstate import ExtractionOptions
-
-        opts = ExtractionOptions(preserve_layout=True)
-        for b in batches:
-            out = {
-                "doc_id": [], "row_idx": [], "col_idx": [],
-                "cell_text": [], "n_rows": [], "n_cols": [],
-            }
-            for doc_id, norm in zip(b["doc_id"], b["norm"]):
-                words = [w for w in (norm or "").split(" ") if w]
-                nw = len(words)
-                cells = [
-                    [
-                        (
-                            words[(r * TABLE_COLS + c) % nw][:TABLE_WORD_CLIP]
-                            if nw
-                            else "x"
-                        )
-                        for c in range(TABLE_COLS)
-                    ]
-                    for r in range(TABLE_ROWS)
-                ]
-                pdf = build_borderless_table_pdf(cells)
-                res = extract_pdf_bytes(pdf, opts)
-                for t in detect_borderless_tables(res.page_fragments[0]):
-                    for cell in t.cells:
-                        out["doc_id"].append(doc_id)
-                        out["row_idx"].append(cell.row)
-                        out["col_idx"].append(cell.column)
-                        out["cell_text"].append(cell.text)
-                        out["n_rows"].append(t.rows)
-                        out["n_cols"].append(t.columns)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, row_idx int, col_idx int, cell_text string, "
-        "n_rows int, n_cols int",
-    )
-
-
 def q_pdf_extract_tables_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table detection, both families in one relation (text/
     table_detection.rs; borderless is the reference's declared-but-stubbed
@@ -3431,6 +3209,25 @@ ELEM_PARA_WORDS = 20  # section body splits into paragraphs of this size
 ELEM_CHUNK_TOKENS = 64  # hybrid chunker max_tokens (word-count proxy)
 
 
+def _element_chunk_rows(elements, max_tokens: int):
+    """HybridChunker output as (kind, heading, chunk, n_tokens) rows: a
+    title/header/footer chunk (always one element) keeps that element's
+    kind, any other chunk is 'body'; the chunk text joins the element
+    texts with one space and n_tokens is its word count."""
+    from .kernel.rag_graph import HybridChunkConfig, HybridChunker
+
+    chunker = HybridChunker(HybridChunkConfig(max_tokens=max_tokens))
+    for ch in chunker.chunk(elements):
+        kind = ch.elements[0].kind
+        text = " ".join(e.display_text() for e in ch.elements)
+        yield (
+            kind if kind in ("title", "header", "footer") else "body",
+            ch.heading_context,
+            text,
+            len(text.split()),
+        )
+
+
 def q_rag_chunk_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ELEMENT-TYPED chunking, end-to-end through real layout: each doc is
     rendered as sectioned pages (18pt title + 12pt body paragraphs with
@@ -3454,8 +3251,8 @@ def q_rag_chunk_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
         import math
 
         from .corpus import build_sectioned_pdf
-        from .kernel.elements import classify_pages, hybrid_chunks
         from .kernel.extract import extract_pdf_bytes
+        from .kernel.partition import classify_pages
         from .kernel.textstate import ExtractionOptions
 
         opts = ExtractionOptions(
@@ -3483,15 +3280,15 @@ def q_rag_chunk_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pdf = build_sectioned_pdf(sections)
                 res = extract_pdf_bytes(pdf, opts)
                 elements = classify_pages(res.page_fragments)
-                for cid, ch in enumerate(
-                    hybrid_chunks(elements, ELEM_CHUNK_TOKENS)
+                for cid, (kind, heading, chunk, n_tokens) in enumerate(
+                    _element_chunk_rows(elements, ELEM_CHUNK_TOKENS)
                 ):
                     out["doc_id"].append(doc_id)
                     out["chunk_id"].append(cid)
-                    out["kind"].append(ch.kind)
-                    out["heading"].append(ch.heading)
-                    out["chunk"].append(ch.text)
-                    out["n_tokens"].append(ch.n_tokens)
+                    out["kind"].append(kind)
+                    out["heading"].append(heading)
+                    out["chunk"].append(chunk)
+                    out["n_tokens"].append(n_tokens)
             yield pd.DataFrame(out)
 
     return docs.mapInPandas(
@@ -3584,9 +3381,9 @@ def q_pdf_export_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             export_contextual_with_metadata_and_pages,
             export_structured_markdown,
         )
-        from .kernel.elements import classify_pages
         from .kernel.extract import extract_pdf_bytes
         from .kernel.pages import flatten_page_tree, page_content
+        from .kernel.partition import classify_pages
         from .kernel.reader import PdfReader
         from .kernel.tables import detect_page_tables
         from .kernel.textstate import ExtractionOptions
@@ -3654,7 +3451,7 @@ def q_pdf_export_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                 md = export_structured_markdown(elements, tables, meta)
                 by_page: dict[int, list[str]] = {}
                 for el in elements:
-                    by_page.setdefault(el.page, []).append(el.text)
+                    by_page.setdefault(el.page(), []).append(el.display_text())
                 page_texts = [
                     (i + 1, "\n\n".join(by_page.get(i, [])))
                     for i in range(n_pages)
@@ -3794,8 +3591,8 @@ def q_rag_chunk_typed_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .corpus import build_pdf_with_content_stream, escape_pdf_string
-        from .kernel.elements import classify_pages, hybrid_chunks
         from .kernel.extract import extract_pdf_bytes
+        from .kernel.partition import classify_pages
         from .kernel.textstate import ExtractionOptions
 
         opts = ExtractionOptions(
@@ -3830,13 +3627,15 @@ def q_rag_chunk_typed_page(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pdf = build_pdf_with_content_stream(b" ".join(parts))
                 res = extract_pdf_bytes(pdf, opts)
                 els = classify_pages(res.page_fragments)
-                for cid, ch in enumerate(hybrid_chunks(els, CHUNK_WORDS)):
+                for cid, (kind, heading, chunk, n_tokens) in enumerate(
+                    _element_chunk_rows(els, CHUNK_WORDS)
+                ):
                     out["doc_id"].append(doc_id)
                     out["chunk_id"].append(cid)
-                    out["kind"].append(ch.kind)
-                    out["heading"].append(ch.heading)
-                    out["chunk"].append(ch.text)
-                    out["n_tokens"].append(ch.n_tokens)
+                    out["kind"].append(kind)
+                    out["heading"].append(heading)
+                    out["chunk"].append(chunk)
+                    out["n_tokens"].append(n_tokens)
             yield pd.DataFrame(out)
 
     return docs.mapInPandas(
@@ -4497,40 +4296,8 @@ WHERE k.keep AND q.quality >= {TRAIN_MIN_QUALITY}
 
 
 # ---------------------------------------------------------------------------
-# multimodal stub + corpus stats
+# invoice, multimodal and corpus stats
 # ---------------------------------------------------------------------------
-
-
-def q_media_stub_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: treat each document's bytes as an opaque binary
-    media column; 'feature extraction' runs in an Arrow-batched pandas stage
-    (the real decode — image/audio libs — is stubbed per round-1 scope, but
-    the schema, batching, and binary transport are production-shaped)."""
-    d = _rebalance_for_udf(
-        spark, _docs(spark, sf_dir).select("doc_id", "text")
-    ).select(
-        "doc_id", F.encode(norm_col("text"), "UTF-8").alias("media")
-    )
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for b in batches:
-            out = {"doc_id": [], "media_len": [], "media_md5": []}
-            for doc_id, blob in zip(b["doc_id"], b["media"]):
-                data = bytes(blob) if blob is not None else b""
-                out["doc_id"].append(doc_id)
-                out["media_len"].append(len(data))
-                out["media_md5"].append(hashlib.md5(data).hexdigest())
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(feats, schema="doc_id long, media_len long, media_md5 string")
-
-
-ORACLE_MEDIA_STUB = f"""
-SELECT doc_id, length(norm) AS media_len, md5(norm) AS media_md5
-FROM (SELECT doc_id, {NORM_SQL.format(col='text')} AS norm FROM documents)
-"""
 
 
 def q_pdf_extract_invoice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4708,45 +4475,6 @@ SELECT doc_id,
        'media://img/' || CAST(doc_id AS VARCHAR) AS media_ref,
        length({norm}) AS n_bytes,
        md5({norm}) AS media_md5,
-       {dims}
-FROM documents
-"""
-
-
-def q_media_fake_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction through the full binary pipeline
-    (multimodal.extract_media_features over a synthesized media table):
-    the stub 'encoder' is md5-derived so the oracle can recompute every
-    embedding dimension from the source text."""
-    from .multimodal import extract_media_features, synth_media_table
-
-    docs = _docs_norm_rebalanced(spark, sf_dir)
-    media = synth_media_table(spark, docs).where(F.col("media_type") == "image")
-    feats = extract_media_features(media, dims=4)
-    return feats.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "media_ref",
-        "n_bytes",
-        *[
-            F.round(F.element_at("fake_embedding", i + 1).cast("double"), 6).alias(
-                f"e{i}"
-            )
-            for i in range(4)
-        ],
-    )
-
-
-def _media_fake_emb_oracle() -> str:
-    norm = NORM_SQL.format(col="text")
-    dims = ",\n       ".join(
-        f"ROUND(CAST(('0x' || substr(md5('{i}:' || {norm}), 1, 8)) AS UBIGINT)"
-        f" / 4294967296.0, 6) AS e{i}"
-        for i in range(4)
-    )
-    return f"""
-SELECT doc_id,
-       'media://img/' || CAST(doc_id AS VARCHAR) AS media_ref,
-       length({norm}) AS n_bytes,
        {dims}
 FROM documents
 """
@@ -4954,22 +4682,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(q_dedup_minhash_lsh(spark, sf_dir))
 
 
-ORACLE_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE pairs AS ({{minhash}}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach (doc, label) AS (
-  SELECT DISTINCT src, src FROM edges
-  UNION
-  SELECT e.dst, r.label FROM reach r JOIN edges e ON e.src = r.doc
-)
-SELECT doc AS doc_id, MIN(label) AS cluster FROM reach GROUP BY doc
-"""
-
-
 def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end dedup DECISION: candidates (MinHash-LSH) → connected
     components → keep exactly one representative per near-dup cluster (its
@@ -5169,26 +4881,6 @@ SELECT b.doc_id,
 FROM base b
 JOIN rep r ON b.doc_id = r.doc_id
 LEFT JOIN ent e ON b.doc_id = e.doc_id
-"""
-
-
-ORACLE_CHAR_ENTROPY = f"""
-WITH n AS (SELECT doc_id, {NORM_SQL.format(col='text')} AS norm FROM documents),
-chars AS (
-  SELECT doc_id, c
-  FROM (SELECT doc_id, string_split(norm, '') AS cs FROM n), UNNEST(cs) AS t(c)
-  WHERE len(c) > 0
-),
-counts AS (SELECT doc_id, c, COUNT(*) AS k FROM chars GROUP BY doc_id, c),
-totals AS (SELECT doc_id, SUM(k) AS nn FROM counts GROUP BY doc_id),
-ent AS (
-  SELECT counts.doc_id,
-         ROUND(-SUM((k * 1.0 / nn) * log2(k * 1.0 / nn)), 6) AS char_entropy
-  FROM counts JOIN totals ON counts.doc_id = totals.doc_id
-  GROUP BY counts.doc_id
-)
-SELECT d.doc_id, COALESCE(ent.char_entropy, 0.0) AS char_entropy
-FROM documents d LEFT JOIN ent ON d.doc_id = ent.doc_id
 """
 
 

@@ -259,6 +259,9 @@ class _E:
         self.kind = kind
         self.text = text
 
+    def display_text(self):
+        return self.text
+
 
 def test_table_to_markdown_pipes_and_escaping():
     t = _T(

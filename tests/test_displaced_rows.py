@@ -6,6 +6,10 @@ their rows (their kernels are subsets of text_quality_score +
 tfidf_top_terms and of the doc_fingerprint binary mapInPandas path).
 Both stay implemented — these tests keep the exact Spark-vs-DuckDB
 differential the driver used to run for them, over sf0.001.
+
+The same differential pins the element-model queries
+(rag_chunk_elements, rag_chunk_typed_page, pdf_export_markdown), which
+run the partitioner and the hybrid chunker end to end.
 """
 
 from __future__ import annotations
@@ -79,3 +83,13 @@ def test_media_features_differential(spark, con):
 
     _compare(q_media_features(spark, "/root/testdata/sf0.001"), con,
              _media_features_oracle())
+
+
+@pytest.mark.parametrize(
+    "name", ["rag_chunk_elements", "rag_chunk_typed_page", "pdf_export_markdown"]
+)
+def test_element_query_differential(spark, con, name):
+    from oxidizepdf_spark.queries import build_oracles, build_queries
+
+    _compare(build_queries()[name](spark, "/root/testdata/sf0.001"), con,
+             build_oracles()[name])
