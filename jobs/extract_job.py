@@ -13,6 +13,18 @@ partitions already recorded in the metrics table for this run-id
 (checkpoint resume), salts by document size, extracts, and writes spans +
 per-partition lineage metrics. Executor counts come from spark-submit
 (--num-executors); nothing here assumes local mode.
+
+Each document goes through the kernel once: the extraction result is
+persisted, both writes read it, and it is released when the job ends
+(also when a write fails).
+
+Commit order: spans first, then metrics. A metrics row for
+(run_id, part_id) is the resume marker, so a part only counts as done once
+its spans are on disk. A ``--resume`` re-extracts every part without a
+marker and replaces those spans partitions rather than appending to them,
+so a part whose spans landed before a crash is rewritten, not duplicated:
+re-running the same resume any number of times leaves one spans row per
+document.
 """
 
 from __future__ import annotations
@@ -57,7 +69,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from oxidizepdf_spark.kernel.textstate import ExtractionOptions
-    from oxidizepdf_spark.pipeline import run_extraction
+    from oxidizepdf_spark.pipeline import (
+        extract_spans,
+        metrics_from_results,
+        resume_filter,
+    )
     from oxidizepdf_spark.table_io import prune_partitions, read_table, write_table
 
     spark = SparkSession.builder.appName(
@@ -76,7 +92,7 @@ def main() -> None:
                 F.col("run_id") == args.run_id
             )
         except AnalysisException as e:
-            if e.getErrorClass() not in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
+            if e.getCondition() not in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
                 raise
             done = None  # first run: no metrics table yet
 
@@ -86,11 +102,22 @@ def main() -> None:
         error_mode=args.error_mode,
         password=args.password,
     )
-    spans, metrics = run_extraction(
-        docs, run_id=args.run_id, options=options, done_metrics=done
-    )
-    write_table(spans, args.output, partition_by=("part_id",), mode="append" if args.resume else "overwrite")
-    write_table(metrics, args.metrics, partition_by=(), mode="append")
+    results = extract_spans(resume_filter(docs, done), options).persist()
+    try:
+        write_table(
+            results.select("doc_id", "part_id", "spans"),
+            args.output,
+            partition_by=("part_id",),
+            mode="overwrite_partitions" if args.resume else "overwrite",
+        )
+        write_table(
+            metrics_from_results(results, args.run_id),
+            args.metrics,
+            partition_by=(),
+            mode="append",
+        )
+    finally:
+        results.unpersist()
     print(f"run {args.run_id} complete", file=sys.stderr)
     spark.stop()
 

@@ -3,7 +3,7 @@
 The Spark-first layer (SURVEY.md §2.8): documents are embarrassingly
 parallel, so the only cross-node concerns are
 
-- Arrow batch exchange into the Python workers (``mapInPandas``),
+- Arrow batch exchange into the Python workers (``mapInArrow``),
 - salted repartitioning so skewed mega-PDFs don't serialize a task,
 - per-partition lineage + metrics for checkpoint/resume,
 - the resume anti-join that skips completed work.

@@ -104,19 +104,31 @@ def write_table(
 ) -> None:
     """Write to an Iceberg identifier (``catalog.db.tbl``) when an Iceberg
     catalog is live, else to a Parquet directory path partitioned by the
-    same columns (partition pruning still applies via Catalyst)."""
+    same columns (partition pruning still applies via Catalyst).
+
+    ``mode`` is ``overwrite`` (replace the whole table), ``append``, or
+    ``overwrite_partitions``: replace only the partitions that hold rows
+    of ``df`` and keep the others — an idempotent per-partition commit
+    (Iceberg ``overwritePartitions``; parquet dynamic partition overwrite,
+    set on this write only, not on the session)."""
     spark = df.sparkSession
     cat = _iceberg_catalog(spark)
     if cat is not None and "/" not in target:
-        writer = df.writeTo(f"{cat}.{target}")
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "overwrite":
+        ident = f"{cat}.{target}"
+        writer = df.writeTo(ident)
+        if mode == "overwrite" or not spark.catalog.tableExists(ident):
+            if partition_by:
+                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
             writer.createOrReplace()
+        elif mode == "overwrite_partitions":
+            writer.overwritePartitions()
         else:
             writer.append()
         return
-    w = df.write.mode(mode)
+    if mode == "overwrite_partitions":
+        w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    else:
+        w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(target)

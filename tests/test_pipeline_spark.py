@@ -1,4 +1,4 @@
-"""Spark pipeline tests: end-to-end span equality through mapInPandas,
+"""Spark pipeline tests: end-to-end span equality through mapInArrow,
 skew salting, per-partition metrics, and checkpoint-resume semantics.
 """
 
@@ -137,6 +137,58 @@ def test_partition_pruning_reaches_scan(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "part_id" in plan
     assert pruned.select("part_id").distinct().count() <= 2
+
+
+def test_overwrite_partitions_replaces_only_the_frames_parts(spark, tmp_path):
+    from oxidizepdf_spark.table_io import read_table, write_table
+
+    path = str(tmp_path / "t")
+    write_table(spark.createDataFrame([("a", 0), ("b", 1)], "v string, part_id int"), path)
+    again = spark.createDataFrame([("c", 1)], "v string, part_id int")
+    write_table(again, path, mode="overwrite_partitions")
+    write_table(again, path, mode="overwrite_partitions")
+    got = sorted(tuple(r) for r in read_table(spark, path).collect())
+    assert got == [("a", 0), ("c", 1)]
+    # the per-write option leaves the session's overwrite mode alone
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+
+@pytest.mark.parametrize(
+    "mode,exists,expected",
+    [
+        ("overwrite", True, ["partitionedBy", "createOrReplace"]),
+        ("append", True, ["append"]),
+        ("append", False, ["partitionedBy", "createOrReplace"]),
+        ("overwrite_partitions", True, ["overwritePartitions"]),
+        ("overwrite_partitions", False, ["partitionedBy", "createOrReplace"]),
+    ],
+)
+def test_iceberg_write_modes(monkeypatch, mode, exists, expected):
+    """With an Iceberg catalog live, each mode ends in one
+    ``DataFrameWriterV2`` action; a missing table is created."""
+    from types import SimpleNamespace
+
+    from oxidizepdf_spark import table_io
+
+    called = []
+
+    class Writer:
+        def __getattr__(self, name):
+            def call(*args):
+                called.append(name)
+                return self
+
+            return call
+
+    catalog = SimpleNamespace(tableExists=lambda ident: exists)
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(catalog=catalog),
+        writeTo=lambda ident: Writer(),
+    )
+    monkeypatch.setattr(table_io, "_iceberg_catalog", lambda spark: "cat")
+    monkeypatch.setattr(table_io.F, "col", lambda c: c)
+    table_io.write_table(df, "db.spans", partition_by=("part_id",), mode=mode)
+    assert called == expected
 
 
 def test_pipeline_determinism_run_twice_exceptall(spark):
