@@ -1,8 +1,10 @@
 """Per-document parse kernels.
 
 Everything in this subpackage is plain Python/numpy — no Spark imports.
-These functions run *inside* Arrow-batched UDFs (``mapInPandas``); one
-call handles one document, the outer loop over an Arrow batch is driven
-by the pipeline layer. The PDF object graph never crosses the DataFrame
-boundary (SURVEY.md §1.1 key insight).
+These functions run *inside* Arrow-batched UDFs — ``mapInArrow`` on the
+extraction job's path (``pipeline.extract_spans``), ``mapInPandas`` in the
+query suite (``queries._map_rows``); one call handles one document, the
+outer loop over an Arrow batch is driven by the calling layer. The PDF
+object graph never crosses the DataFrame boundary (SURVEY.md §1.1 key
+insight).
 """

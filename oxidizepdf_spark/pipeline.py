@@ -38,7 +38,6 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("n_spans", T.IntegerType()),
         T.StructField("bytes_in", T.LongType()),
         T.StructField("wall_ms", T.DoubleType()),
-        T.StructField("task_partition", T.IntegerType()),
     ]
 )
 
@@ -66,11 +65,6 @@ def _extract_batches(
     document's parse stays in-kernel; tolerant-mode errors surface as
     columns, never as task failures."""
     import pyarrow as pa
-
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    task_partition = ctx.partitionId() if ctx is not None else -1
 
     span_struct = pa.struct(
         [
@@ -165,11 +159,10 @@ def _extract_batches(
                 pa.array(nspans_c, type=pa.int32()),
                 pa.array(bytes_c, type=pa.int64()),
                 pa.array(wall_c, type=pa.float64()),
-                pa.array([task_partition] * n, type=pa.int32()),
             ],
             names=[
                 "doc_id", "part_id", "spans", "ok", "mode", "error",
-                "n_pages", "n_spans", "bytes_in", "wall_ms", "task_partition",
+                "n_pages", "n_spans", "bytes_in", "wall_ms",
             ],
         )
 
@@ -178,8 +171,6 @@ def extract_spans(
     docs: DataFrame,
     options: ExtractionOptions | None = None,
     salt: bool = True,
-    salt_partitions: int | None = None,
-    mega_threshold_bytes: int = 2_000_000,
 ) -> DataFrame:
     """docs_raw → wide result frame (spans + per-doc lineage columns).
 
@@ -193,9 +184,7 @@ def extract_spans(
     ``metrics_from_results`` aggregates the lineage columns.
     """
     options = options or ExtractionOptions()
-    prepared = (
-        salt_by_size(docs, salt_partitions, mega_threshold_bytes) if salt else docs
-    )
+    prepared = salt_by_size(docs) if salt else docs
     return prepared.mapInArrow(
         lambda it: _extract_batches(it, options), schema=RESULT_SCHEMA
     )
@@ -270,11 +259,10 @@ def run_extraction(
     run_id: str,
     options: ExtractionOptions | None = None,
     done_metrics: DataFrame | None = None,
-    salt: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full job: resume-filter → salt → extract → (spans_df, metrics_df)."""
     todo = resume_filter(docs, done_metrics)
-    results = extract_spans(todo, options, salt=salt)
+    results = extract_spans(todo, options)
     spans = results.select("doc_id", "part_id", "spans")
     metrics = metrics_from_results(results, run_id)
     return spans, metrics

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel.textstate import ExtractionOptions
-from .pipeline import RESULT_SCHEMA, _extract_batches
+from .pipeline import extract_spans
 from .table_io import DOCS_SCHEMA
 
 
@@ -43,14 +43,11 @@ def stream_extract(
     metrics-table anti-join). Returns the StreamingQuery (stopped already
     if ``await_termination``).
     """
-    opts = options or ExtractionOptions()
     reader = spark.readStream.schema(DOCS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_path)
-    results = docs.mapInArrow(
-        lambda it: _extract_batches(it, opts), schema=RESULT_SCHEMA
-    )
+    results = extract_spans(docs, options, salt=False)
     spans = results.select("doc_id", "part_id", "spans", "ok", "mode", "error")
     q = (
         spans.writeStream.format("parquet")

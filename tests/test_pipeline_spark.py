@@ -1,5 +1,6 @@
 """Spark pipeline tests: end-to-end span equality through mapInArrow,
-skew salting, per-partition metrics, and checkpoint-resume semantics.
+skew salting, per-partition metrics, checkpoint-resume semantics, and the
+query suite's per-document mapInPandas row harness.
 """
 
 from __future__ import annotations
@@ -211,6 +212,58 @@ def test_pipeline_determinism_run_twice_exceptall(spark):
     b = flat(extract_spans(docs))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_map_rows_harness_zero_to_many_rows_per_document(spark):
+    """The query suite's per-document harness (queries._map_rows): a row
+    function yields 0..n tuples per document, the frame carries the
+    schema's names and types in order (nested types included), and a
+    batch whose documents all yield nothing still converts to the schema.
+    One document per input partition, so the 0-row document is a whole
+    batch on its own."""
+    from oxidizepdf_spark.queries import _map_rows
+
+    schema = (
+        "doc_id long, k int, label string, "
+        "tags array<struct<t string, w double>>, even boolean"
+    )
+
+    def make_row():
+        def row(doc_id, n):
+            for k in range(n):
+                yield (
+                    doc_id, k, f"d{doc_id}-{k}", [{"t": f"t{k}", "w": k / 2}],
+                    k % 2 == 0,
+                )
+
+        return row
+
+    docs = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 0), (2, 2), (3, 1)], 3),
+        "doc_id long, n int",
+    )
+    assert docs.rdd.glom().map(len).collect() == [1, 1, 1]
+    out = _map_rows(docs, schema, make_row)
+    assert out.dtypes == [
+        ("doc_id", "bigint"),
+        ("k", "int"),
+        ("label", "string"),
+        ("tags", "array<struct<t:string,w:double>>"),
+        ("even", "boolean"),
+    ]
+    rows = sorted(
+        (r.doc_id, r.k, r.label, [tuple(t) for t in r.tags], r.even)
+        for r in out.collect()
+    )
+    assert rows == [
+        (2, 0, "d2-0", [("t0", 0.0)], True),
+        (2, 1, "d2-1", [("t1", 0.5)], False),
+        (3, 0, "d3-0", [("t0", 0.0)], True),
+    ]
+
+    empty = _map_rows(docs.where("n = 0"), schema, make_row)
+    assert empty.dtypes == out.dtypes
+    assert empty.collect() == []
 
 
 def test_per_document_password_column(spark):

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Exact-equivalence harness for optimization rounds: snapshot a query's
-full result (sorted rows, full float precision) to a pickle, or compare a
-fresh run against a stored snapshot bit-for-bit.
+full result (column names and Spark types, sorted rows, full float
+precision) to a pickle, or compare a fresh run against a stored snapshot
+bit-for-bit. The session is ``table_io.get_spark()``'s default, so
+``SPARK_GRAFT_CPUS`` sets the local core count.
 
 The driver hashes query results exactly, so a restructured query must be
 EXACTLY equal, not approximately: snapshot before the edit, compare after.
@@ -28,7 +30,7 @@ def fetch(spark, name: str, sf_dir: str):
     else:
         fn = qs.get(name) or getattr(Q, f"q_{name}")
     df = fn(spark, sf_dir)
-    cols = df.columns
+    cols = df.dtypes  # (name, Spark type) pairs
     rows = sorted(tuple(r) for r in df.collect())
     Q.release_persisted()
     return {"cols": cols, "rows": rows}
@@ -40,7 +42,7 @@ def main() -> None:
 
     from oxidizepdf_spark.table_io import get_spark
 
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     if mode == "save":
